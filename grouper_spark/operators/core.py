@@ -76,6 +76,7 @@ def collect_vector_panel(df, id_col: str, vec_col: str, max_rows: int):
     faster than Row-pickling ``collect()`` on a 20k × 64-double panel,
     and the numpy view of the value buffer is near-free."""
     import numpy as np
+    import pyarrow as pa
 
     try:
         tbl = df.select(id_col, vec_col).limit(max_rows + 1).toArrow()
@@ -85,6 +86,10 @@ def collect_vector_panel(df, id_col: str, vec_col: str, max_rows: int):
         return None
     idc = tbl.column(0).combine_chunks()
     vc = tbl.column(1).combine_chunks()
+    if not pa.types.is_integer(idc.type):
+        # a float id would truncate through astype(int64) and alias
+        # distinct ids; the distributed fallback keeps them apart
+        return None
     if idc.null_count or vc.null_count or vc.values.null_count:
         return None
     try:

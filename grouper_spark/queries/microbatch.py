@@ -4,6 +4,7 @@ schema are stable)."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 import uuid
 
@@ -11,18 +12,17 @@ from pyspark.sql import functions as F
 
 from ..sources import table
 from ..streaming import (
+    append_stream_file,
+    drain,
     grouper_process_stream,
+    replay,
     stage_stream_source,
+    stateful_extrema,
     stateful_running_sum,
+    stateful_sessionize,
 )
-from ..streaming.stream import append_stream_file, stateful_sessionize
-from ..streaming.stream import scoped_shuffle_partitions
 from . import query
 from ..operators.core import literal_frame
-
-# Stateful streaming runs without AQE; size the state-store width to the
-# replayed fixture state instead of the batch default.
-_STREAM_SHUFFLE = 8
 
 
 @query("q40_grouper_stream", oracle=None, tags=("streaming", "rows_only"))
@@ -43,13 +43,7 @@ def q40_grouper_stream(spark, sf_dir):
     # availableNow + maxFilesPerTrigger=1 runs exactly 4 micro-batches.
     source_dir = stage_stream_source(table(spark, sf_dir, "events"), 4)
 
-    out = grouper_process_stream(
-        spark,
-        source_dir,
-        proc,
-        interval_ms=None,
-        max_files_per_trigger=1,
-    )
+    out = grouper_process_stream(spark, source_dir, proc)
     return out.select(
         "event_id", "event_type_upper", "value_doubled", "status"
     ).orderBy("event_id")
@@ -70,18 +64,14 @@ ORDER BY window_start
 )
 def q52_stream_watermark_window(spark, sf_dir):
     """Event-time tumbling window + watermark over a real stream
-    (readStream → withWatermark → window agg → availableNow drain,
+    (replay → withWatermark → window agg → availableNow drain,
     complete output). State is keyed by window — at scale this is
     RocksDB-backed streaming state. Complete-mode totals equal the
     batch aggregation, so this streaming query carries an exact SQL
     oracle."""
     src = stage_stream_source(table(spark, sf_dir, "events"), 4)
-    schema = spark.read.parquet(src).schema
-    name = f"wm_{uuid.uuid4().hex[:12]}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    windows = (
+        replay(spark, src)
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(
@@ -91,17 +81,8 @@ def q52_stream_watermark_window(spark, sf_dir):
             ).alias("total_value"),
         )
     )
-    with scoped_shuffle_partitions(spark, _STREAM_SHUFFLE):
-        q = (
-            stream.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        drain(windows.writeStream.outputMode("complete"), memory=True)
         .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
         .orderBy("window_start")
     )
@@ -132,11 +113,7 @@ def q57_stateful_running_sum(spark, sf_dir):
         table(spark, sf_dir, "events").select("user_id", money("value").alias("cents")),
         4,
     )
-
-    with scoped_shuffle_partitions(spark, _STREAM_SHUFFLE):
-        log = stateful_running_sum(
-            spark, src, key_col="user_id", cents_col="cents", max_files_per_trigger=1
-        )
+    log = stateful_running_sum(spark, src, key_col="user_id", cents_col="cents")
     # final state per key = emission with the max running count
     final = (
         log.groupBy("key")
@@ -167,24 +144,15 @@ def q59_stream_dedup_watermark(spark, sf_dir):
     the fixture's time span nothing expires, so the distinct key set
     equals batch DISTINCT — the exact SQL oracle."""
     src = stage_stream_source(table(spark, sf_dir, "events"), 4)
-    schema = spark.read.parquet(src).schema
-    name = f"dd_{uuid.uuid4().hex[:12]}"
-    with scoped_shuffle_partitions(spark, _STREAM_SHUFFLE):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withWatermark("ts", "365 days")
-            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-            .select("user_id", "event_type")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("user_id", "event_type")
+    keys = (
+        replay(spark, src)
+        .withWatermark("ts", "365 days")
+        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+        .select("user_id", "event_type")
+    )
+    return drain(keys.writeStream.outputMode("append"), memory=True).orderBy(
+        "user_id", "event_type"
+    )
 
 
 @query(
@@ -210,17 +178,8 @@ def q60_stream_stream_join(spark, sf_dir):
     event-time order (range-staged files) so the watermark never evicts
     state that batch semantics would still match."""
     src = stage_stream_source(table(spark, sf_dir, "events"), 4, order_by="ts")
-    schema = spark.read.parquet(src).schema
-
-    def stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
     purchases = (
-        stream()
+        replay(spark, src)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -230,7 +189,7 @@ def q60_stream_stream_join(spark, sf_dir):
         .withWatermark("p_ts", "1 hour")
     )
     clicks = (
-        stream()
+        replay(spark, src)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -246,20 +205,12 @@ def q60_stream_stream_join(spark, sf_dir):
             " AND c_ts <= p_ts"
         ),
     )
-    name = f"ssj_{uuid.uuid4().hex[:12]}"
-    with scoped_shuffle_partitions(spark, _STREAM_SHUFFLE):
-        q = (
-            joined.select(
-                "purchase_id", "click_id", F.col("p_user").alias("user_id")
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("purchase_id", "click_id")
+    pairs = joined.select(
+        "purchase_id", "click_id", F.col("p_user").alias("user_id")
+    )
+    return drain(pairs.writeStream.outputMode("append"), memory=True).orderBy(
+        "purchase_id", "click_id"
+    )
 
 
 @query(
@@ -283,9 +234,6 @@ def q71_incremental_matview(spark, sf_dir):
     groupBy — the exact SQL oracle. This is the foreachBatch upsert
     pattern that keeps derived tables fresh without reprocessing
     history."""
-    import os
-    import tempfile
-
     from ..functions.text import money
 
     src = stage_stream_source(
@@ -295,7 +243,6 @@ def q71_incremental_matview(spark, sf_dir):
         4,
     )
     view_dir = os.path.join(tempfile.gettempdir(), f"mv-{uuid.uuid4().hex}")
-    schema = spark.read.parquet(src).schema
 
     def merge(batch_df, batch_id):
         part = batch_df.groupBy("event_type").agg(
@@ -320,20 +267,11 @@ def q71_incremental_matview(spark, sf_dir):
             "overwrite"
         ).parquet(view_dir)
 
-    with scoped_shuffle_partitions(spark, _STREAM_SHUFFLE):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(merge)
-            .option(
-                "checkpointLocation",
-                view_dir + "-ckpt",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        replay(spark, src)
+        .writeStream.foreachBatch(merge)
+        .option("checkpointLocation", view_dir + "-ckpt")
+    )
     return spark.read.parquet(view_dir).orderBy("event_type")
 
 
@@ -360,15 +298,11 @@ def q90_stream_static_join(spark, sf_dir):
     shuffle is the bounded (segment, type) key space. Complete-mode
     totals equal the batch join+agg, giving an exact SQL oracle."""
     src = stage_stream_source(table(spark, sf_dir, "events"), 4)
-    schema = spark.read.parquet(src).schema
     dim = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
-    name = f"ss_{uuid.uuid4().hex[:12]}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    totals = (
+        replay(spark, src)
         .join(F.broadcast(dim), "user_id")
         .groupBy("segment", "event_type")
         .agg(
@@ -378,16 +312,9 @@ def q90_stream_static_join(spark, sf_dir):
             ).alias("total_value"),
         )
     )
-    with scoped_shuffle_partitions(spark, _STREAM_SHUFFLE):
-        q = (
-            stream.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("segment", "event_type")
+    return drain(totals.writeStream.outputMode("complete"), memory=True).orderBy(
+        "segment", "event_type"
+    )
 
 
 @query(
@@ -415,8 +342,6 @@ def q113_stream_outer_join(spark, sf_dir):
     events, the second triggers the eviction pass that emits the held
     outer rows. Sentinel rows (negative event_id) are filtered from the
     result, which then equals the batch LEFT JOIN — the SQL oracle."""
-    from ..streaming import append_stream_file
-
     ev = table(spark, sf_dir, "events")
     src = stage_stream_source(ev, 4, order_by="ts")
 
@@ -439,20 +364,11 @@ def q113_stream_outer_join(spark, sf_dir):
             )
         )
 
-    staged_cols = spark.read.parquet(src).columns
-    append_stream_file(src, sentinels(0, "2030-01-01 00:00:00").select(*staged_cols))
-    append_stream_file(src, sentinels(1, "2031-01-01 00:00:00").select(*staged_cols))
-    schema = spark.read.parquet(src).schema
-
-    def stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    append_stream_file(src, sentinels(0, "2030-01-01 00:00:00").select(*ev.columns))
+    append_stream_file(src, sentinels(1, "2031-01-01 00:00:00").select(*ev.columns))
 
     purchases = (
-        stream()
+        replay(spark, src)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -462,7 +378,7 @@ def q113_stream_outer_join(spark, sf_dir):
         .withWatermark("p_ts", "1 hour")
     )
     clicks = (
-        stream()
+        replay(spark, src)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -479,26 +395,16 @@ def q113_stream_outer_join(spark, sf_dir):
         ),
         "leftOuter",
     )
-    name = f"soj_{uuid.uuid4().hex[:12]}"
-    with scoped_shuffle_partitions(spark, _STREAM_SHUFFLE):
-        q = (
-            joined.select(
-                "purchase_id", "click_id", F.col("p_user").alias("user_id")
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    pairs = joined.select(
+        "purchase_id", "click_id", F.col("p_user").alias("user_id")
+    )
+    out = drain(pairs.writeStream.outputMode("append"), memory=True)
     # Sentinels are filtered AFTER the sink: a right-side predicate above
     # a streaming left-outer join interferes with the null-emission path
     # (observed: watermark-gated outer rows silently dropped), so the
     # streaming plan stays a bare join and the batch read cleans up.
     return (
-        spark.table(name)
-        .filter(F.col("purchase_id") >= 0)
+        out.filter(F.col("purchase_id") >= 0)
         .filter(F.col("click_id").isNull() | (F.col("click_id") >= 0))
         .orderBy("purchase_id", F.col("click_id").asc_nulls_first())
     )
@@ -550,10 +456,7 @@ def q130_stateful_sessions(spark, sf_dir):
         (F.max("ts") + F.expr("INTERVAL 365 DAYS")).alias("ts"),
     )
     append_stream_file(src, sentinel)
-    with scoped_shuffle_partitions(spark, _STREAM_SHUFFLE):
-        out = stateful_sessionize(
-            spark, src, key_col="user_id", ts_col="ts", gap_s=300
-        )
+    out = stateful_sessionize(spark, src, key_col="user_id", ts_col="ts", gap_s=300)
     return (
         out.filter(F.col("key") >= 0)
         .select(
@@ -589,8 +492,6 @@ def q187_idempotent_sink(spark, sf_dir):
     guard is correct, the doubled replay changes nothing and the final
     state equals the plain batch aggregate — the exact SQL oracle. A
     non-idempotent sink would double every count and fail the hash."""
-    import os
-
     from ..functions.text import money
 
     src = stage_stream_source(
@@ -633,17 +534,7 @@ def q187_idempotent_sink(spark, sf_dir):
         apply_batch(batch_df, batch_id)
         apply_batch(batch_df, batch_id)  # simulated post-failure retry
 
-    schema = spark.read.parquet(src).schema
-    with scoped_shuffle_partitions(spark, _STREAM_SHUFFLE):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(apply_twice)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(replay(spark, src).writeStream.foreachBatch(apply_twice))
     return (
         spark.read.parquet(sink_dir)
         .select(
@@ -679,10 +570,6 @@ def q191_checkpoint_recovery(spark, sf_dir):
     plain batch aggregate (the exact SQL oracle). A sink fed by a
     restart WITHOUT offset tracking would double the first half and
     fail the hash."""
-    import os
-
-    from pyspark.sql import functions as _F
-
     from ..functions.text import money
 
     base = table(spark, sf_dir, "events").filter(F.col("user_id") < 30)
@@ -696,33 +583,26 @@ def q191_checkpoint_recovery(spark, sf_dir):
     run_id = uuid.uuid4().hex
     ckpt = os.path.join(tempfile.gettempdir(), f"ckpt-{run_id}")
     sink = os.path.join(tempfile.gettempdir(), f"sink-{run_id}")
-    schema = spark.read.parquet(src).schema
+    stream = replay(spark, src)
 
-    def drain():
-        with scoped_shuffle_partitions(spark, _STREAM_SHUFFLE):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    def run():
+        drain(
+            stream.writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+        )
 
-    drain()  # run 1: processes the first half, then stops
+    run()  # run 1: processes the first half, then stops
     append_stream_file(src, second)  # data lands while "down"
-    drain()  # run 2: SAME checkpoint — resumes at recorded offsets
+    run()  # run 2: SAME checkpoint — resumes at recorded offsets
 
     return (
         spark.read.parquet(sink)
         .groupBy("user_id")
         .agg(
-            _F.count("*").cast("bigint").alias("n_events"),
-            _F.sum("cents").cast("bigint").alias("total_cents"),
+            F.count("*").cast("bigint").alias("n_events"),
+            F.sum("cents").cast("bigint").alias("total_cents"),
         )
         .orderBy("user_id")
     )
@@ -744,25 +624,19 @@ ORDER BY user_id
     tags=("streaming", "stateful", "tws"),
 )
 def a343_tws_extrema(spark, sf_dir):
-    """Per-key running (count, min, max) through Spark 4's
-    ``transformWithStateInPandas`` (SPARK-49564) — named ValueState on a
-    StatefulProcessorHandle, update-mode emissions across a
+    """Per-key running (count, min, max) in ``applyInPandasWithState``
+    GroupState (``stateful_extrema``), update-mode emissions across a
     4-micro-batch replay; the final emission per key must equal the
-    batch groupBy, which is the exact SQL oracle.
-
-    ENVIRONMENT GATE (documented per VERDICT r3 #4): the TWS Python
-    state-server protocol requires the public ``protobuf`` package. When
-    it is importable the TWS path runs; otherwise this falls back to
-    ``stateful_extrema`` (applyInPandasWithState), which implements the
-    IDENTICAL emission contract, so the result — and the oracle match —
-    is the same either way. The a-prefix name sorts ahead of q* so the
-    driver's alphabetical-first-50 correctness sample finally covers a
-    never-sampled query (VERDICT r3 #5).
+    batch groupBy, which is the exact SQL oracle. The registered name
+    keeps its historical ``tws`` tag: Spark 4's
+    ``transformWithStateInPandas`` needs the ``protobuf`` package, which
+    this environment does not ship, so the operator runs on
+    applyInPandasWithState. The a-prefix name sorts it ahead of the q*
+    queries (see the README on query naming).
 
     ``value`` is fixed-pointed to integer cents Spark-side BEFORE the
     stream so min/max match DuckDB's rounding exactly."""
     from ..functions.text import money
-    from ..streaming import stateful_extrema, transform_with_state_extrema
 
     src = stage_stream_source(
         table(spark, sf_dir, "events").select(
@@ -770,17 +644,7 @@ def a343_tws_extrema(spark, sf_dir):
         ),
         4,
     )
-    with scoped_shuffle_partitions(spark, _STREAM_SHUFFLE):
-        try:
-            log = transform_with_state_extrema(
-                spark, src, key_col="user_id", cents_col="cents",
-                max_files_per_trigger=1,
-            )
-        except ImportError:
-            log = stateful_extrema(
-                spark, src, key_col="user_id", cents_col="cents",
-                max_files_per_trigger=1,
-            )
+    log = stateful_extrema(spark, src, key_col="user_id", cents_col="cents")
     final = (
         log.groupBy("key")
         .agg(F.max(F.struct("n_seen", "min_cents", "max_cents")).alias("s"))

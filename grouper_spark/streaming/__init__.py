@@ -1,12 +1,13 @@
 from .grouper import Grouper, Request, shutdown, start, submit
 from .stream import (
     append_stream_file,
+    drain,
     grouper_process_stream,
+    replay,
     stage_stream_source,
     stateful_extrema,
     stateful_running_sum,
     stateful_sessionize,
-    transform_with_state_extrema,
 )
 
 __all__ = [
@@ -17,9 +18,10 @@ __all__ = [
     "shutdown",
     "grouper_process_stream",
     "append_stream_file",
+    "drain",
+    "replay",
     "stage_stream_source",
     "stateful_extrema",
     "stateful_running_sum",
     "stateful_sessionize",
-    "transform_with_state_extrema",
 ]

@@ -10,10 +10,16 @@ batch transform and — crucially — implements the reference's
 function and emitting status/error columns instead of letting Spark's
 task-retry machinery re-run user side effects the reference would never
 re-run.
+
+Every streaming query here and in ``queries/microbatch.py`` is one
+bounded replay: ``replay`` reads a staged source one file per
+micro-batch, and ``drain`` runs the writer to completion inside the
+state-store shuffle width.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 from contextlib import contextmanager
 import tempfile
@@ -22,6 +28,84 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+
+# Stateful streaming runs without AQE, so every state-store operator
+# pays the full static shuffle width: 32 partitions × N micro-batches of
+# task overhead for state that fits in a handful. Size it to the
+# replayed fixture state instead of the batch default (at scale, to the
+# state volume).
+_STREAM_SHUFFLE = 8
+
+
+@contextmanager
+def _scoped_shuffle_partitions(spark: SparkSession, n: int):
+    """Set spark.sql.shuffle.partitions to ``n`` for the body and restore
+    it on exit, also when the body raises, so the caller's batch queries
+    keep the session's width."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def replay(
+    spark: SparkSession, source_dir: str, *, max_files_per_trigger: int = 1
+) -> DataFrame:
+    """Streaming read of a staged parquet source (``stage_stream_source``).
+
+    The schema is inferred once from the staged files; each micro-batch
+    reads ``max_files_per_trigger`` files in mtime order (the capacity
+    analogue), so with the default of one file a directory of N staged
+    files replays as N micro-batches in the same order every run."""
+    schema = spark.read.parquet(source_dir).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(source_dir)
+    )
+
+
+def drain(
+    writer: DataStreamWriter,
+    *,
+    memory: bool = False,
+    interval_ms: int | None = None,
+):
+    """Start ``writer`` and run it until its source is exhausted — the
+    reference's drain-on-close (core.clj:58-66) — inside the one
+    state-store shuffle width.
+
+    - ``interval_ms=None`` runs ``Trigger.AvailableNow`` to termination;
+      otherwise ``Trigger.ProcessingTime`` (the ``:interval`` analogue)
+      until all available input is processed, then stops the query.
+    - ``memory=True`` sends the output to a memory sink under a
+      generated query name and returns ``spark.table(<name>)``;
+      otherwise the finished ``StreamingQuery`` is returned (its
+      ``recentProgress`` holds one entry per micro-batch).
+
+    A failing query raises ``StreamingQueryException`` after the shuffle
+    width is restored."""
+    spark = writer._spark  # the writer's session; there is no public accessor
+    name = None
+    if memory:
+        name = f"drain_{uuid.uuid4().hex[:12]}"
+        writer = writer.format("memory").queryName(name)
+    with _scoped_shuffle_partitions(spark, _STREAM_SHUFFLE):
+        if interval_ms is None:
+            query = writer.trigger(availableNow=True).start()
+            query.awaitTermination()
+        else:
+            query = writer.trigger(
+                processingTime=f"{interval_ms} milliseconds"
+            ).start()
+            try:
+                query.processAllAvailable()
+            finally:
+                query.stop()
+    return spark.table(name) if memory else query
 
 
 def grouper_process_stream(
@@ -29,7 +113,6 @@ def grouper_process_stream(
     source_dir: str,
     proc_fn: Callable[[DataFrame], DataFrame],
     *,
-    schema=None,
     interval_ms: int | None = None,
     max_files_per_trigger: int = 1,
     result_dir: str | None = None,
@@ -45,8 +128,6 @@ def grouper_process_stream(
     Returns the accumulated result as a DataFrame read back from the
     result sink.
     """
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
     if result_dir is None:
         result_dir = os.path.join(
             tempfile.gettempdir(), f"grouper-stream-{uuid.uuid4().hex}"
@@ -91,28 +172,20 @@ def grouper_process_stream(
                 F.lit(str(exc)).alias("error"),
             ).write.mode("append").parquet(result_dir + "-errors")
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    writer = (
+        replay(spark, source_dir, max_files_per_trigger=max_files_per_trigger)
+        .writeStream.foreachBatch(handle_batch)
+        .option(
+            "checkpointLocation",
+            os.path.join(tempfile.gettempdir(), f"grouper-ckpt-{uuid.uuid4().hex}"),
+        )
     )
-    writer = stream.writeStream.foreachBatch(handle_batch).option(
-        "checkpointLocation",
-        os.path.join(tempfile.gettempdir(), f"grouper-ckpt-{uuid.uuid4().hex}"),
-    )
-    if interval_ms is None:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-    else:
-        query = writer.trigger(processingTime=f"{interval_ms} milliseconds").start()
-        query.processAllAvailable()
-        query.stop()
-    import glob as _glob
+    drain(writer, interval_ms=interval_ms)
 
     # A batch that failed mid-action leaves result_dir existing but with no
     # committed part files (Spark's commit protocol aborts the task output),
     # so test for committed data, not the directory.
-    if not _glob.glob(os.path.join(result_dir, "*.parquet")):
+    if not glob.glob(os.path.join(result_dir, "*.parquet")):
         if seen["ok_schema"] is not None:
             # every batch succeeded but produced zero rows (empty
             # partitions commit no part files) → typed empty result
@@ -130,8 +203,6 @@ def stateful_running_sum(
     *,
     key_col: str,
     cents_col: str,
-    schema=None,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Custom stateful streaming operator: per-key running (count, sum)
     maintained in explicit ``GroupState`` via ``applyInPandasWithState``.
@@ -149,9 +220,6 @@ def stateful_running_sum(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
-
     def update(key, pdfs, state):
         n, tot = state.get if state.exists else (0, 0)
         for pdf in pdfs:
@@ -162,11 +230,8 @@ def stateful_running_sum(
             {"key": [key[0]], "n_seen": [n], "total_cents": [tot]}
         )
 
-    name = f"state_{uuid.uuid4().hex[:12]}"
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    log = (
+        replay(spark, source_dir)
         .groupBy(key_col)
         .applyInPandasWithState(
             update,
@@ -175,14 +240,8 @@ def stateful_running_sum(
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(log.writeStream.outputMode("update"), memory=True)
 
 
 def stateful_sessionize(
@@ -192,9 +251,6 @@ def stateful_sessionize(
     key_col: str,
     ts_col: str,
     gap_s: int = 300,
-    schema=None,
-    max_files_per_trigger: int = 1,
-    watermark_delay: str = "1 second",
 ) -> DataFrame:
     """Custom stateful session windows with **event-time timeout
     eviction**: per-key open sessions live in ``GroupState``; a session
@@ -219,8 +275,6 @@ def stateful_sessionize(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
     gap_us = gap_s * 1_000_000
 
     def update(key, pdfs, state):
@@ -266,12 +320,9 @@ def stateful_sessionize(
                 }
             )
 
-    name = f"sess_{uuid.uuid4().hex[:12]}"
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .withWatermark(ts_col, watermark_delay)
+    sessions = (
+        replay(spark, source_dir)
+        .withWatermark(ts_col, "1 second")
         .groupBy(key_col)
         .applyInPandasWithState(
             update,
@@ -282,14 +333,8 @@ def stateful_sessionize(
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(sessions.writeStream.outputMode("append"), memory=True)
 
 
 def stage_stream_source(
@@ -308,7 +353,6 @@ def stage_stream_source(
     file→micro-batch assignment, so with ``maxFilesPerTrigger=1`` the
     stream replays the same N batches in the same order every run.
     """
-    import glob
     import time
 
     if source_dir is None:
@@ -346,7 +390,6 @@ def append_stream_file(source_dir: str, df: DataFrame) -> None:
     trailing batches after the real data (an unbounded production stream
     gets them for free from ongoing traffic).
     """
-    import glob
     import shutil
 
     existing = glob.glob(os.path.join(source_dir, "*.parquet"))
@@ -360,150 +403,21 @@ def append_stream_file(source_dir: str, df: DataFrame) -> None:
     os.utime(dest, (latest + 10, latest + 10))
 
 
-@contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Temporarily lower spark.sql.shuffle.partitions for a streaming
-    query that executes eagerly (availableNow + awaitTermination).
-
-    Stateful streaming disables AQE, so every state-store operator runs
-    with the full static shuffle width — 32 partitions × N micro-batches
-    of task overhead for state that fits in a handful. At scale you size
-    this to the state volume; for the fixture replays a narrow width is
-    the right plan. The conf is restored before the caller's batch
-    queries run."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def transform_with_state_extrema(
-    spark: SparkSession,
-    source_dir: str,
-    *,
-    key_col: str,
-    cents_col: str,
-    schema=None,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Per-key running (count, min, max) via ``transformWithStateInPandas``
-    — Spark 4's arbitrary-state API (SPARK-49564), the successor to
-    ``applyInPandasWithState``: state lives in named, typed variables on
-    a ``StatefulProcessorHandle`` (ValueState here; ListState/MapState and
-    per-key timers are the same surface), so an operator can evolve its
-    state schema and register event-time timers without re-encoding a
-    monolithic state tuple.
-
-    The processor keeps one BIGINT triple per key in a ValueState and
-    re-emits the running triple every micro-batch (update mode). State
-    shuffles once on the key and lives in the per-partition state store;
-    the Arrow batch path keeps the Python hop vectorized. Integer cents
-    make the fold order-independent, so the final emission per key is
-    exactly the batch ``groupBy`` answer.
-
-    ENVIRONMENT GATE: the transformWithState state-server protocol
-    speaks protobuf from the Python side; without the ``protobuf``
-    package the TWS driver worker crashes at init. This operator raises
-    a clear ImportError up front instead (tests skip on it), and the
-    equivalent contract stays driver-checked through q57's
-    applyInPandasWithState path, which has no such dependency.
-    """
-    import pandas as pd
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise ImportError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(its state-server protocol); not available in this "
-            "environment — use stateful_running_sum "
-            "(applyInPandasWithState) instead"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
-
-    class ExtremaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState(
-                "agg", "n BIGINT, mn BIGINT, mx BIGINT"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self._agg.get() if self._agg.exists() else None
-            n, mn, mx = prev if prev is not None else (0, None, None)
-            for pdf in rows:
-                c = pdf[cents_col]
-                if len(c) == 0:
-                    continue
-                n += int(len(c))
-                bmn, bmx = int(c.min()), int(c.max())
-                mn = bmn if mn is None else min(mn, bmn)
-                mx = bmx if mx is None else max(mx, bmx)
-            self._agg.update((n, mn, mx))
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "n_seen": [n],
-                    "min_cents": [mn],
-                    "max_cents": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    name = f"tws_{uuid.uuid4().hex[:12]}"
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            statefulProcessor=ExtremaProcessor(),
-            outputStructType=(
-                "key BIGINT, n_seen BIGINT, min_cents BIGINT, max_cents BIGINT"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
 def stateful_extrema(
     spark: SparkSession,
     source_dir: str,
     *,
     key_col: str,
     cents_col: str,
-    schema=None,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """Per-key running (count, min, max) via ``applyInPandasWithState`` —
-    the dependency-free twin of ``transform_with_state_extrema`` with the
-    IDENTICAL emission contract (``key, n_seen, min_cents, max_cents``
-    re-emitted every micro-batch, update mode), so callers can fall back
-    to it when the TWS protobuf gate fails and downstream reductions /
-    oracles are unaffected.
+    """Per-key running (count, min, max) via ``applyInPandasWithState``:
+    one BIGINT triple per key in ``GroupState``, re-emitted every
+    micro-batch (update mode) as ``key, n_seen, min_cents, max_cents``.
+    Integer cents make the fold order-independent, so the final emission
+    per key is exactly the batch ``groupBy`` answer.
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
 
     def update(key, pdfs, state):
         n, mn, mx = state.get if state.exists else (0, None, None)
@@ -525,11 +439,8 @@ def stateful_extrema(
             }
         )
 
-    name = f"extrema_{uuid.uuid4().hex[:12]}"
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    log = (
+        replay(spark, source_dir)
         .groupBy(key_col)
         .applyInPandasWithState(
             update,
@@ -541,11 +452,5 @@ def stateful_extrema(
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(log.writeStream.outputMode("update"), memory=True)

@@ -129,6 +129,44 @@ def test_capacity_flush_without_interval():
         assert f3.result(5) == 6
 
 
+@pytest.mark.parametrize(
+    "trigger, batches",
+    [
+        ("flush", [[1, 2], [3]]),
+        ("full", [[1, 2], [3, 4], [5]]),
+        ("shutdown", [[1, 2], [3]]),
+    ],
+    ids=["flush", "full", "shutdown"],
+)
+def test_put_after_drain_snapshot_waits_for_next_trigger(trigger, batches):
+    """Size-only flush: item 3's blocking put lands after the drain of
+    [1, 2], so it is not in that batch and no timer will flush it. It
+    stays queued until the next flush(), full queue or shutdown(), and
+    is then delivered."""
+    seen = []
+
+    def proc(xs):
+        seen.append(list(xs))
+        return xs
+
+    g = Grouper(proc, capacity=2, interval=None)
+    f1, f2 = g.submit(1), g.submit(2)
+    f3 = g.submit(3)  # queue full → wake; put completes after the drain
+    assert f1.result(5) == 1 and f2.result(5) == 2
+    time.sleep(0.1)
+    assert not f3.done()
+    if trigger == "flush":
+        g.flush()
+    elif trigger == "full":
+        g.submit(4)  # queue [3, 4] is full again
+        g.submit(5)  # → wake; 5 lands after the drain of [3, 4]
+    else:
+        g.shutdown()
+    assert f3.result(5) == 3
+    g.shutdown()
+    assert seen == batches
+
+
 # -- invariant 8: producer backpressure -----------------------------------
 
 

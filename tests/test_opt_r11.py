@@ -97,8 +97,8 @@ def test_a450_driver_path_bitmatches_distributed(spark, sf_dir):
 
 
 def test_collect_vector_panel_guards(spark):
-    """Over-cap, NULL vectors and ragged widths all return None (the
-    caller's distributed fallback path)."""
+    """Over-cap, NULL vectors, ragged widths, NaN and float ids all
+    return None (the caller's distributed fallback path)."""
     from grouper_spark.operators.core import collect_vector_panel
 
     ok = spark.createDataFrame(
@@ -121,6 +121,11 @@ def test_collect_vector_panel_guards(spark):
         [(1, [float("nan"), 2.0])], "id bigint, v array<double>"
     )
     assert collect_vector_panel(nan, "id", "v", 10) is None
+    # float ids would truncate through astype(int64) and alias 1.5 with 1
+    float_ids = spark.createDataFrame(
+        [(1.5, [1.0, 2.0]), (1.0, [3.0, 4.0])], "id double, v array<double>"
+    )
+    assert collect_vector_panel(float_ids, "id", "v", 10) is None
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",

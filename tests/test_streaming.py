@@ -106,9 +106,7 @@ def test_stateful_running_sum_state_accumulates(spark):
     for i, f in enumerate(files):
         os.utime(f, (now + 10 * i, now + 10 * i))
 
-    log = stateful_running_sum(
-        spark, src, key_col="user_id", cents_col="cents", max_files_per_trigger=1
-    )
+    log = stateful_running_sum(spark, src, key_col="user_id", cents_col="cents")
     emitted = log.collect()
     # final state per key equals the global aggregate
     final = {}
@@ -284,52 +282,39 @@ def test_stateful_sessionize_timeout_evicts_abandoned_keys(spark, tmp_path):
     assert got == [(1, 2), (2, 1), (2, 2)]
 
 
-def test_transform_with_state_extrema_or_env_gate(spark, sf_dir):
-    """transformWithStateInPandas path: runs the per-key extrema
-    processor end-to-end when protobuf is available; otherwise asserts
-    the operator fails fast with the documented ImportError instead of
-    crashing the TWS driver worker mid-stream."""
-    import pytest
-
-    from grouper_spark.functions.text import money
-    from grouper_spark.queries.microbatch import stage_stream_source
-    from grouper_spark.sources import table
-    from grouper_spark.streaming.stream import transform_with_state_extrema
+def test_replay_runs_one_micro_batch_per_staged_file(spark):
+    """replay + drain over a 4-file staged source is exactly 4
+    micro-batches, and every row arrives once."""
+    from grouper_spark.streaming import drain, replay, stage_stream_source
 
     src = stage_stream_source(
-        table(spark, sf_dir, "events").select(
-            "user_id", money("value").alias("cents")
-        ),
-        2,
+        spark.createDataFrame([(i,) for i in range(40)], "id long"), 4
     )
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="protobuf"):
-            transform_with_state_extrema(
-                spark, src, key_col="user_id", cents_col="cents"
-            )
-        return
-    log = transform_with_state_extrema(
-        spark, src, key_col="user_id", cents_col="cents"
-    )
-    from pyspark.sql import functions as F
+    q = drain(replay(spark, src).writeStream.format("noop"))
+    assert len(q.recentProgress) == 4
+    assert [p["numInputRows"] > 0 for p in q.recentProgress] == [True] * 4
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 40
 
-    final = (
-        log.groupBy("key")
-        .agg(F.max(F.struct("n_seen", "min_cents", "max_cents")).alias("s"))
-        .select("key", "s.n_seen", "s.min_cents", "s.max_cents")
-    )
-    batch = (
-        table(spark, sf_dir, "events")
-        .select("user_id", money("value").alias("cents"))
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_seen"),
-            F.min("cents").alias("min_cents"),
-            F.max("cents").alias("max_cents"),
-        )
-    )
-    assert sorted(map(tuple, final.collect())) == sorted(
-        map(tuple, batch.collect())
-    )
+
+def test_drain_restores_shuffle_partitions_when_query_raises(spark):
+    """The state-store shuffle width is scoped to the drain: a streaming
+    query that fails still leaves the session's width as it found it."""
+    from pyspark.errors import StreamingQueryException
+
+    from grouper_spark.streaming import drain, replay, stage_stream_source
+    from grouper_spark.streaming.stream import _STREAM_SHUFFLE
+
+    src = stage_stream_source(spark.createDataFrame([(1,)], "id long"), 1)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    width = str(_STREAM_SHUFFLE + 5)  # any width the drain does not use
+    spark.conf.set("spark.sql.shuffle.partitions", width)
+
+    def fail(batch_df, batch_id):
+        raise RuntimeError("batch-boom")
+
+    try:
+        with pytest.raises(StreamingQueryException, match="batch-boom"):
+            drain(replay(spark, src).writeStream.foreachBatch(fail))
+        assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
