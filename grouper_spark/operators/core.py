@@ -8,6 +8,7 @@ shuffle partitions, and AQE handles skew.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -64,28 +65,83 @@ def literal_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
         return spark.createDataFrame(rows, schema)
 
 
-def collect_vector_panel(df, id_col: str, vec_col: str, max_rows: int):
-    """Collect a bounded (id, vector) panel to the driver via Arrow.
+# Driver-side panel bound of the driver-exact queries: 100k rows × 64
+# float64 ≈ 51 MB of vector panel (plus one int64 twin while
+# fixed-pointing) — well under driver headroom, and every fixture is
+# orders of magnitude below it. Kernels that are O(n²) in memory pass
+# their own smaller cap.
+PANEL_MAX_ROWS = 100_000
 
-    Returns ``(ids, X)`` — int64 and float64 ndarrays — or ``None``
-    when the panel exceeds ``max_rows`` (the caller's distributed
-    fallback then defines the semantics), is empty, or is not a clean
-    fixed-width finite float panel (NULLs, ragged lengths, NaN/inf,
-    non-integer ids). ``DataFrame.toArrow()`` moves the rows as Arrow
-    record batches (JVM-side columnar serialization) — measured ~1.7×
-    faster than Row-pickling ``collect()`` on a 20k × 64-double panel,
-    and the numpy view of the value buffer is near-free."""
+_log = logging.getLogger(__name__)
+
+
+def bounded_panel(panel_df, cap: int, kernel, fallback):
+    """Run ``kernel`` on the driver over a bounded panel, else ``fallback``.
+
+    One bounded collect, ``panel_df.limit(cap + 1).toArrow()``, moves at
+    most cap+1 rows to the driver as Arrow record batches (JVM-side
+    columnar serialization — measured ~1.7× faster than Row-pickling
+    ``collect()`` on a 20k × 64-double panel). ``kernel(table)`` gets
+    the pyarrow Table and returns the query's DataFrame, or ``None`` to
+    decline. An empty panel, a panel over ``cap`` or a declined kernel
+    runs ``fallback()`` — the distributed plan, which then defines the
+    semantics. With ``fallback=None`` a decline raises ``ValueError``:
+    for a panel bounded by construction, reaching the cap is a bug.
+
+    Every call logs one INFO record carrying ``kernel``, ``path``
+    (``driver`` or ``fallback``), ``reason`` and ``rows`` as record
+    attributes — which path the query took, and why."""
+    table = panel_df.limit(cap + 1).toArrow()
+    rows = table.num_rows
+    name = kernel.__qualname__
+    out = None
+    if rows == 0:
+        reason = "empty panel"
+    elif rows > cap:
+        reason = f"over cap {cap}"
+    else:
+        out = kernel(table)
+        reason = "within cap" if out is not None else "kernel declined"
+    if out is None and fallback is None:
+        raise ValueError(
+            f"{name}: {reason} ({rows} rows collected, cap {cap})"
+            " and no fallback"
+        )
+    path = "driver" if out is not None else "fallback"
+    _log.info(
+        "bounded_panel kernel=%s path=%s reason=%s rows=%d",
+        name, path, reason, rows,
+        extra={"kernel": name, "path": path, "reason": reason, "rows": rows},
+    )
+    return out if out is not None else fallback()
+
+
+def vector_kernel(fn, *args):
+    """A ``bounded_panel`` kernel over an (id, vector) panel: parses the
+    table with ``collect_vector_panel`` and returns
+    ``fn(*args, ids, X)``, declining when the parser does."""
+
+    def kernel(table):
+        panel = collect_vector_panel(table)
+        return None if panel is None else fn(*args, *panel)
+
+    kernel.__qualname__ = fn.__qualname__
+    return kernel
+
+
+def collect_vector_panel(table):
+    """Parse a collected (id, vector) Arrow table into ndarrays.
+
+    Reads the table's first two columns. Returns ``(ids, X)`` — int64
+    and float64 ndarrays — or ``None`` when the panel is empty or is
+    not a clean fixed-width finite float panel (NULLs, ragged lengths,
+    NaN/inf, non-integer ids). The numpy view of the Arrow value buffer
+    is near-free."""
     import numpy as np
     import pyarrow as pa
 
-    try:
-        tbl = df.select(id_col, vec_col).limit(max_rows + 1).toArrow()
-    except Exception:
-        return None
-    if not (0 < tbl.num_rows <= max_rows):
-        return None
-    idc = tbl.column(0).combine_chunks()
-    vc = tbl.column(1).combine_chunks()
+    idc = table.column(0).combine_chunks()
+    vc = table.column(1).combine_chunks()
     if not pa.types.is_integer(idc.type):
         # a float id would truncate through astype(int64) and alias
         # distinct ids; the distributed fallback keeps them apart

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_similarity, dot, l2_normalize
+from ..queries._sqlgen import quote_ident
 from .core import ensure_parallelism
 
 
@@ -79,14 +80,19 @@ def random_hyperplanes(dim: int, num_planes: int, seed: int = 42) -> list[list[f
     return planes
 
 
-def _bucket_col(vec_sql: str, planes: list[list[float]]):
+def _bucket_col(vec_col: str, planes: list[list[float]]):
     """Sign-pattern bucket id of a vector against fixed hyperplanes.
 
     ONE F.expr SQL string instead of planes × dim ``F.lit`` py4j calls
     (the a381/q240 plan-construction lesson): each plane dot parses to
     the identical aggregate/zip_with tree ``dot()`` built — same
     double literals via round-trip repr, same fold order, identical
-    sign bits. ``vec_sql`` is the vector column NAME."""
+    sign bits. ``vec_col`` is the vector column NAME (backtick-quoted
+    here, so any name works). A vector whose width differs from the
+    planes' raises: ``zip_with`` would NULL-pad the dot, put every row
+    in bucket 0 and turn the bucket join into a cross join."""
+    vec_sql = quote_ident(vec_col)
+    dim = len(planes[0])
     terms = " + ".join(
         "(CASE WHEN aggregate(zip_with("
         + vec_sql
@@ -97,7 +103,12 @@ def _bucket_col(vec_sql: str, planes: list[list[float]]):
         f" THEN {2 ** i} ELSE 0 END)"
         for i, p in enumerate(planes)
     )
-    return F.expr(f"CAST(0 AS BIGINT) + {terms}")
+    return F.expr(
+        f"CASE WHEN size({vec_sql}) != {dim} THEN raise_error(concat("
+        f"'lsh_bucket_ann: expected {dim}-dim vectors, got ',"
+        f" CAST(size({vec_sql}) AS STRING)))"
+        f" ELSE CAST(0 AS BIGINT) + {terms} END"
+    )
 
 
 def ivf_ann(

@@ -10,6 +10,13 @@ the SQL half of that contract.
 from __future__ import annotations
 
 
+def quote_ident(name: str) -> str:
+    """Backtick-quote a column name for interpolation into Spark SQL
+    text (``F.expr``): any name parses as one identifier, and an
+    embedded backtick is doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def sql_money_sum(expr: str, alias: str, scale: int = 2) -> str:
     # The terminal CAST AS DOUBLE pins the declared output type: DuckDB
     # types SUM(BIGINT) as HUGEINT and a bare decimal literal as DECIMAL,

@@ -3105,19 +3105,18 @@ def a448_ipf_raking(spark, sf_dir):
     so no scaling step can divide by zero. The output weight-to-count
     ratio per cell is the sampling rate a downstream mixer applies."""
     from ..functions.exact import round0_half_up
+    from ..operators.core import PANEL_MAX_ROWS, bounded_panel
 
     d = table(spark, sf_dir, "documents")
-    cells = (
-        d.groupBy("source", "lang")
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .limit(100_001)
-        .collect()
+    cells = d.groupBy("source", "lang").agg(
+        F.count("*").cast("bigint").alias("n")
     )
-    if len(cells) <= 100_000:
-        # driver-exact path: same arithmetic, zero per-iteration jobs
+
+    def driver(tbl):
+        # same arithmetic as the distributed loop, zero per-iteration jobs
         rows = [
             [r["source"], r["lang"], r["n"], r["n"] * 1_000_000]
-            for r in cells
+            for r in tbl.to_pylist()
         ]
         sum_n = sum(r[2] for r in rows)
         n_src = len({r[0] for r in rows})
@@ -3144,19 +3143,22 @@ def a448_ipf_raking(spark, sf_dir):
                     float(r[3]) * float(t_lang[r[1]]) / float(s_lang[r[1]])
                 )
         return literal_frame(
-        spark,
+            spark,
             [tuple(r) for r in rows],
             "source string, lang string, n bigint, w_micro bigint",
         ).orderBy("source", "lang")
 
-    w = (
-        d.groupBy("source", "lang")
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .select(
-            "source", "lang", "n", (F.col("n") * 1000000).alias("w")
-        )
-        .localCheckpoint(eager=False)
+    return bounded_panel(
+        cells, PANEL_MAX_ROWS, driver, lambda: _a448_distributed(cells)
     )
+
+
+def _a448_distributed(cells):
+    """The distributed IPF loop: 20 checkpointed half-steps, each
+    scaling the (source × lang) weight table by a broadcast margin."""
+    w = cells.select(
+        "source", "lang", "n", (F.col("n") * 1000000).alias("w")
+    ).localCheckpoint(eager=False)
     tgt = w.agg(
         F.round(
             F.sum("n").cast("double")

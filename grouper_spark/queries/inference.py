@@ -3218,8 +3218,10 @@ def a493_hits(spark, sf_dir):
     ``div``), with the final ÷10⁹ + round staying engine-side on the
     literal frame so double formation and HALF_UP rounding are
     Spark's own. A >100k-edge vocabulary (not a plausible event-type
-    set) falls back to the distributed loop unchanged. At 100 TB only
+    set) raises instead of running off the driver. At 100 TB only
     the lag window and first count see data."""
+    from ..operators.core import PANEL_MAX_ROWS, bounded_panel
+
     ev = table(spark, sf_dir, "events")
     trans = (
         ev.select(
@@ -3234,8 +3236,9 @@ def a493_hits(spark, sf_dir):
         .agg(F.count("*").cast("bigint").alias("w"))
     )
     node_names = ["click", "error", "purchase", "signup", "view"]
-    raw_edges = trans.collect()
-    if len(raw_edges) <= 100_000:
+
+    def driver(tbl):
+        raw_edges = tbl.to_pylist()
         tw = sum(r["w"] for r in raw_edges)
         edges = [
             (r["src"], r["dst"], (2_000_000 * r["w"] + tw) // (2 * tw))
@@ -3260,91 +3263,23 @@ def a493_hits(spark, sf_dir):
             htot = sum(hraw.values())
             h = {n: hraw.get(n, 0) // (htot // 1_000_000_000) for n in node_names}
         lit = literal_frame(
-        spark,
+            spark,
             [(n, h[n], a[n]) for n in node_names],
             "node string, hs bigint, as_ bigint",
         )
-    else:  # pragma: no cover - vocabulary beyond any plausible event mix
-        wall = Window.orderBy(F.lit(1)).rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        edges_df = (
-            trans.withColumn("tw", F.sum("w").over(wall).cast("bigint"))
-            .select(
-                "src",
-                "dst",
-                F.expr("(2000000 * w + tw) div (2 * tw)").alias("w_fp"),
-            )
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-        )
-        nodes = literal_frame(spark, [(n,) for n in node_names], "node string")
-        h_df = nodes.select(
-            "node", F.lit(1000000000).cast("bigint").alias("s")
-        )
-        a_df = None
-        for _ in range(_HITS_ITERS):
-            araw_df = (
-                edges_df.join(h_df.withColumnRenamed("node", "src"), "src")
-                .groupBy("dst")
-                .agg(
-                    F.sum(F.col("w_fp") * F.col("s"))
-                    .cast("bigint")
-                    .alias("raw")
-                )
-                .withColumnRenamed("dst", "node")
-            )
-            atot_df = araw_df.agg(F.sum("raw").cast("bigint").alias("tot"))
-            a_df = (
-                nodes.join(araw_df, "node", "left")
-                .crossJoin(F.broadcast(atot_df))
-                .select(
-                    "node",
-                    F.expr(
-                        "COALESCE(raw, 0) div (tot div 1000000000)"
-                    ).alias("s"),
-                )
-                .coalesce(1)
-                .localCheckpoint(eager=True)
-            )
-            hraw_df = (
-                edges_df.join(
-                    a_df.withColumnRenamed("node", "dst").withColumnRenamed(
-                        "s", "sa"
-                    ),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(
-                    F.sum(F.col("w_fp") * F.col("sa"))
-                    .cast("bigint")
-                    .alias("raw")
-                )
-                .withColumnRenamed("src", "node")
-            )
-            htot_df = hraw_df.agg(F.sum("raw").cast("bigint").alias("tot"))
-            h_df = (
-                nodes.join(hraw_df, "node", "left")
-                .crossJoin(F.broadcast(htot_df))
-                .select(
-                    "node",
-                    F.expr(
-                        "COALESCE(raw, 0) div (tot div 1000000000)"
-                    ).alias("s"),
-                )
-                .coalesce(1)
-                .localCheckpoint(eager=True)
-            )
-        lit = h_df.withColumnRenamed("s", "hs").join(
-            a_df.withColumnRenamed("s", "as_"), "node"
-        )
-    return lit.select(
-        F.col("node").alias("event_type"),
-        F.round(F.col("hs").cast("double") / 1000000000.0, 6).alias("hub_r"),
-        F.round(F.col("as_").cast("double") / 1000000000.0, 6).alias(
-            "auth_r"
-        ),
-    ).orderBy("event_type")
+        return lit.select(
+            F.col("node").alias("event_type"),
+            F.round(F.col("hs").cast("double") / 1000000000.0, 6).alias(
+                "hub_r"
+            ),
+            F.round(F.col("as_").cast("double") / 1000000000.0, 6).alias(
+                "auth_r"
+            ),
+        ).orderBy("event_type")
+
+    # no fallback: the edge list is bounded by the event-type
+    # vocabulary squared (≤25 cells here)
+    return bounded_panel(trans, PANEL_MAX_ROWS, driver, None)
 
 
 _RC_KS = (1, 2, 4, 8, 16, 32)
@@ -3863,8 +3798,10 @@ def a498_absorbing_markov(spark, sf_dir):
     nonnegative BIGINTs, where Python ``//`` IS SQL ``div``, so the
     trajectory is bit-identical to the former 6-checkpoint Spark
     loop; the final ÷10⁶ + round stays engine-side on the literal
-    frame. A >100k-cell vocabulary falls back to the distributed
-    loop unchanged."""
+    frame. A >100k-cell vocabulary raises instead of running off the
+    driver."""
+    from ..operators.core import PANEL_MAX_ROWS, bounded_panel
+
     ev = table(spark, sf_dir, "events")
     trans = (
         ev.select(
@@ -3877,8 +3814,8 @@ def a498_absorbing_markov(spark, sf_dir):
         .groupBy("src", "dst")
         .agg(F.count("*").cast("bigint").alias("w"))
     )
-    raw_rows = trans.collect()
-    if len(raw_rows) <= 100_000:
+    def driver(tbl):
+        raw_rows = tbl.to_pylist()
         tot_by_src: dict[str, int] = {}
         for r in raw_rows:
             tot_by_src[r["src"]] = tot_by_src.get(r["src"], 0) + r["w"]
@@ -3903,63 +3840,18 @@ def a498_absorbing_markov(spark, sf_dir):
                 for s in _ABS_STATES
             }
         lit = literal_frame(
-        spark,
-            [(s, v[s]) for s in _ABS_STATES], "s string, v bigint"
+            spark, [(s, v[s]) for s in _ABS_STATES], "s string, v bigint"
         )
-    else:  # pragma: no cover - vocabulary beyond any plausible event mix
-        rows_ = trans.groupBy("src").agg(
-            F.sum("w").cast("bigint").alias("tot")
-        )
-        q = (
-            trans.filter(F.col("dst") != "purchase")
-            .join(F.broadcast(rows_), "src")
-            .select(
-                "src",
-                "dst",
-                F.expr("(2000000 * w + tot) div (2 * tot)").alias("p_fp"),
-            )
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-        )
-        tstates = literal_frame(
-        spark,
-            [(s,) for s in _ABS_STATES], "s string"
-        )
-        v_df = tstates.select("s", F.lit(0).cast("bigint").alias("v"))
-        for it in range(_ABS_ITERS):
-            stepped = (
-                q.join(
-                    v_df.withColumnRenamed("s", "dst").withColumnRenamed(
-                        "v", "pv"
-                    ),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(
-                    F.expr(
-                        "CAST(SUM(p_fp * pv) AS BIGINT) div 1000000"
-                    ).alias("inc")
-                )
-                .withColumnRenamed("src", "s")
-            )
-            v_df = tstates.join(stepped, "s", "left").select(
-                "s",
-                (
-                    F.lit(1000000).cast("bigint")
-                    + F.coalesce("inc", F.lit(0).cast("bigint"))
-                ).alias("v"),
-            )
-            # eager checkpoint every 4th step: bounds the replanned
-            # chain at depth 4 while paying 6 jobs instead of 24
-            if (it + 1) % 4 == 0:
-                v_df = v_df.coalesce(1).localCheckpoint(eager=True)
-        lit = v_df
-    return lit.select(
-        F.col("s").alias("start_state"),
-        F.round(F.col("v").cast("double") / 1000000.0, 6).alias(
-            "exp_steps_r"
-        ),
-    ).orderBy("start_state")
+        return lit.select(
+            F.col("s").alias("start_state"),
+            F.round(F.col("v").cast("double") / 1000000.0, 6).alias(
+                "exp_steps_r"
+            ),
+        ).orderBy("start_state")
+
+    # no fallback: the transition table is bounded by the event-type
+    # vocabulary squared (≤20 cells here)
+    return bounded_panel(trans, PANEL_MAX_ROWS, driver, None)
 
 
 # Erlang B recurrence B_k = a·B_{k−1}/(k + a·B_{k−1}) unrolled for

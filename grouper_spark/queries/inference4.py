@@ -1804,20 +1804,17 @@ def a191_passing_bablok(spark, sf_dir):
     that ever exceeds the driver bound, and for the degenerate
     rank-out-of-range cases whose NULL flow the relational plan
     defines."""
-    daily = _dailyv(spark, sf_dir)
-    rows = (
-        daily.select(
-            "d", "v", F.expr("CAST(y div 1000 AS BIGINT)").alias("yk")
-        )
-        .collect()
-    )
-    if 0 < len(rows) <= _PB_MAX_PANEL:
-        import numpy as np
+    import numpy as np
 
-        rows.sort(key=lambda r: r["d"])
-        v = np.array([r["v"] for r in rows], dtype=np.int64)
-        yk = np.array([r["yk"] for r in rows], dtype=np.int64)
-        n = len(rows)
+    from ..operators.core import bounded_panel
+
+    daily = _dailyv(spark, sf_dir)
+
+    def driver(tbl):
+        tbl = tbl.sort_by("d")
+        v = tbl.column("v").to_numpy().astype(np.int64)
+        yk = tbl.column("yk").to_numpy().astype(np.int64)
+        n = tbl.num_rows
         iu = np.triu_indices(n, 1)
         den = (v[None, :] - v[:, None])[iu]
         num = (yk[None, :] - yk[:, None])[iu]
@@ -1830,35 +1827,41 @@ def a191_passing_bablok(spark, sf_dir):
             ranks = ((n_pairs + 1) // 2 + k_neg,)
         else:
             ranks = (n_pairs // 2 + k_neg, n_pairs // 2 + 1 + k_neg)
-        if all(1 <= rk <= n_pairs for rk in ranks):
-            if n_pairs % 2 == 1:
-                b = float(ss[ranks[0] - 1])
-            else:
-                b = float((ss[ranks[0] - 1] + ss[ranks[1] - 1]) / 2.0)
-            r = yk.astype(np.float64) - np.float64(b) * v.astype(np.float64)
-            rs = np.sort(r)
-            if n % 2 == 1:
-                a_val = float(rs[(n + 1) // 2 - 1])
-            else:
-                a_val = float((rs[n // 2 - 1] + rs[n // 2]) / 2.0)
-            out = literal_frame(
-        spark,
-                [(n_pairs, k_neg, b, a_val)],
-                "n_pairs bigint, k_neg bigint, b double, a double",
-            )
-            return out.select(
-                "n_pairs",
-                "k_neg",
-                F.round("b", 6).alias("slope_r"),
-                F.round("a", 6).alias("intercept_r"),
-            )
-    return _a191_distributed(spark, daily)
+        if not all(1 <= rk <= n_pairs for rk in ranks):
+            return None  # the relational plan defines the NULL flow
+        if n_pairs % 2 == 1:
+            b = float(ss[ranks[0] - 1])
+        else:
+            b = float((ss[ranks[0] - 1] + ss[ranks[1] - 1]) / 2.0)
+        r = yk.astype(np.float64) - np.float64(b) * v.astype(np.float64)
+        rs = np.sort(r)
+        if n % 2 == 1:
+            a_val = float(rs[(n + 1) // 2 - 1])
+        else:
+            a_val = float((rs[n // 2 - 1] + rs[n // 2]) / 2.0)
+        out = literal_frame(
+            spark,
+            [(n_pairs, k_neg, b, a_val)],
+            "n_pairs bigint, k_neg bigint, b double, a double",
+        )
+        return out.select(
+            "n_pairs",
+            "k_neg",
+            F.round("b", 6).alias("slope_r"),
+            F.round("a", 6).alias("intercept_r"),
+        )
 
-
-# driver-side panel bound for a191: 8000 days ≈ 32M pair slopes ≈ a few
-# hundred MB of transient numpy state; the fixture calendar is ~2404
-# days at every sf, so the fallback only guards a different fixture
-_PB_MAX_PANEL = 8000
+    # 8000 days ≈ 32M pair slopes ≈ a few hundred MB of transient numpy
+    # state; the fixture calendar is ~2404 days at every sf, so the
+    # fallback only guards a different fixture
+    return bounded_panel(
+        daily.select(
+            "d", "v", F.expr("CAST(y div 1000 AS BIGINT)").alias("yk")
+        ),
+        8000,
+        driver,
+        lambda: _a191_distributed(spark, daily),
+    )
 
 
 def _a191_distributed(spark, daily):

@@ -109,14 +109,17 @@ def a208_siegel_repeated_medians(spark, sf_dir):
     order, so ties need no (s, j) tie-breaking. Terminal round(_, 6)
     stays engine-side on the literal frame. The distributed pipeline
     remains as the fallback for an oversized panel."""
-    daily = _dailyv(spark, sf_dir)
-    rows = daily.select("d", "v").collect()
-    if 2 <= len(rows) <= _SIEGEL_MAX_PANEL:
-        import numpy as np
+    import numpy as np
 
-        rows.sort(key=lambda r: r["d"])
-        v = np.array([r["v"] for r in rows], dtype=np.int64)
-        n = len(rows)
+    from ..operators.core import bounded_panel
+
+    daily = _dailyv(spark, sf_dir)
+
+    def driver(tbl):
+        n = tbl.num_rows
+        if n < 2:
+            return None
+        v = tbl.sort_by("d").column("v").to_numpy().astype(np.int64)
         idx = np.arange(1, n + 1, dtype=np.int64)
         num = (v[None, :] - v[:, None]).astype(np.float64)
         den = (idx[None, :] - idx[:, None]).astype(np.float64)
@@ -141,24 +144,25 @@ def a208_siegel_repeated_medians(spark, sf_dir):
         else:
             a_val = float((rs[n // 2 - 1] + rs[n // 2]) / 2.0)
         out = literal_frame(
-        spark,
-            [(n, b, a_val)], "n bigint, b double, a double"
+            spark, [(n, b, a_val)], "n bigint, b double, a double"
         )
         return out.select(
             "n",
             F.round("b", 6).alias("slope_r"),
             F.round("a", 6).alias("intercept_r"),
         )
-    return _a208_distributed(spark, daily)
 
-
-# driver-side panel bound for a208: 4000 days ≈ 128 MB per (n×n)
-# float64 matrix, and num/den/s plus the np.sort copy are live
-# simultaneously, so peak transient memory at the bound is ~4 matrices
-# ≈ 0.5 GB — comfortably inside the driver. The fixture calendar is
-# ~2404 days at every sf, so the fallback only guards a different
-# fixture
-_SIEGEL_MAX_PANEL = 4000
+    # 4000 days ≈ 128 MB per (n×n) float64 matrix, and num/den/s plus
+    # the np.sort copy are live simultaneously, so peak transient
+    # memory at the bound is ~4 matrices ≈ 0.5 GB — comfortably inside
+    # the driver. The fixture calendar is ~2404 days at every sf, so
+    # the fallback only guards a different fixture
+    return bounded_panel(
+        daily.select("d", "v"),
+        4000,
+        driver,
+        lambda: _a208_distributed(spark, daily),
+    )
 
 
 def _a208_distributed(spark, daily):

@@ -2060,30 +2060,24 @@ def a440_geometric_median(spark, sf_dir):
     aggregate per iteration) remains the fallback for a corpus above
     the bound — at 100 TB: 6 linear scans, no self-join, state is
     O(labels × dim)."""
-    from ..operators.core import collect_vector_panel
+    from ..operators.core import PANEL_MAX_ROWS, bounded_panel, vector_kernel
 
     src = table(spark, sf_dir, "embeddings").select(
         "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    panel = collect_vector_panel(src, "label", "v", _A440_MAX_ROWS)
-    if panel is not None:
-        out = _a440_driver_exact(spark, *panel)
-        if out is not None:
-            return out
-    return _a440_distributed(spark, src)
-
-
-# driver-side corpus bound for a440: 100k rows × 64 dims ≈ 51 MB of
-# float64 panel (plus one int64 twin while fixed-pointing) — well under
-# driver headroom; every fixture is orders of magnitude below it
-_A440_MAX_ROWS = 100_000
+    return bounded_panel(
+        src,
+        PANEL_MAX_ROWS,
+        vector_kernel(_a440_driver_exact, spark),
+        lambda: _a440_distributed(spark, src),
+    )
 
 
 def _a440_driver_exact(spark, lab, X):
     """Driver replica of the six Weiszfeld passes on the collected
-    (label, vector) panel (clean-shape checks already done by
-    collect_vector_panel). Returns None (→ caller falls back to the
+    (label, vector) panel (clean-shape checks already done by the
+    panel parser). Returns None (→ caller falls back to the
     distributed loop) when a fixed-point term lands near the int64
     edge — the relational plan then defines the semantics."""
     import numpy as np
@@ -2385,23 +2379,19 @@ def a450_lof_panel(spark, sf_dir):
     the literal frame; the corpus-wide variant swaps the brute-force
     sweep for the LSH/IVF candidate generators (q38/q56) feeding
     identical reach/lrd algebra."""
-    from ..operators.core import collect_vector_panel
+    from ..operators.core import PANEL_MAX_ROWS, bounded_panel, vector_kernel
 
     src = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    panel = collect_vector_panel(src, "vec_id", "v", _A450_MAX_ROWS)
-    if panel is not None:
-        out = _a450_driver_exact(spark, *panel)
-        if out is not None:
-            return out
-    return _a450_distributed(spark, src)
-
-
-# driver-side corpus bound for a450 (same rationale as _A440_MAX_ROWS;
-# the worst-case sweep is then 750 × 100k × 64 numpy flops)
-_A450_MAX_ROWS = 100_000
+    # at the cap the worst-case sweep is 750 × 100k × 64 numpy flops
+    return bounded_panel(
+        src,
+        PANEL_MAX_ROWS,
+        vector_kernel(_a450_driver_exact, spark),
+        lambda: _a450_distributed(spark, src),
+    )
 
 
 def _a450_driver_exact(spark, ids, X):
@@ -2952,17 +2942,25 @@ def a459_kcenter_seeding(spark, sf_dir):
     round(·,0) via the HALF_UP vector replica, argmax by exact
     (-radius, vec_id) ordering; the sweep loop stays as the
     above-cap fallback."""
-    from ..operators.core import collect_vector_panel, ensure_parallelism
+    from ..operators.core import PANEL_MAX_ROWS, bounded_panel, vector_kernel
 
     src = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    panel = collect_vector_panel(src, "vec_id", "v", 100_000)
-    if panel is not None:
-        out = _a459_driver_exact(spark, *panel)
-        if out is not None:
-            return out
+    return bounded_panel(
+        src,
+        PANEL_MAX_ROWS,
+        vector_kernel(_a459_driver_exact, spark),
+        lambda: _a459_distributed(spark, src),
+    )
+
+
+def _a459_distributed(spark, src):
+    """The distributed Gonzalez sweep loop: each sweep embeds the ≤8
+    chosen vectors as codegen literals against the corpus scan and
+    takes the top-1 (radius DESC, vec_id) pick."""
+    from ..operators.core import ensure_parallelism
 
     e = ensure_parallelism(src).localCheckpoint(eager=False)
     first = (

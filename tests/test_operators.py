@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from grouper_spark.functions.text import money, tokens, word_shingles
@@ -413,3 +414,31 @@ def test_asof_join_tolerance_nulls_stale_matches(spark):
     }
     assert got["fresh"] == (ts(2024, 1, 1, 9, 59), 7.0)
     assert got["stale"] == (None, None)
+
+
+def test_lsh_bucket_ann_rejects_wrong_width(spark):
+    """A 63-wide corpus against 64-wide planes fails loudly: zip_with
+    would NULL-pad every plane dot, put every vector in bucket 0 and
+    turn the bucket join into a cross join."""
+    from pyspark.errors import PySparkException
+
+    from grouper_spark.operators import lsh_bucket_ann
+
+    rows = [(i, [float((i * 7 + j) % 5) for j in range(63)]) for i in range(8)]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    q = df.filter(F.col("vec_id") < 2)
+    with pytest.raises(PySparkException, match="expected 64-dim vectors, got 63"):
+        lsh_bucket_ann(df, q, dim=64).collect()
+
+
+def test_lsh_bucket_ann_vector_column_with_space(spark):
+    """The vector column name is backtick-quoted into the bucket SQL:
+    a name with a space parses. Identical vectors always share a
+    bucket, so vec 2 is vec 1's neighbor at cosine 1."""
+    from grouper_spark.operators import lsh_bucket_ann
+
+    rows = [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]), (3, [0.0, 1.0, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id bigint, `my vec` array<double>")
+    q = df.filter(F.col("vec_id") == 1)
+    out = lsh_bucket_ann(df, q, vec_col="my vec", k=2).collect()
+    assert (1, 2, 1.0) in [tuple(r) for r in out]

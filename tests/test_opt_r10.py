@@ -242,59 +242,6 @@ def test_a404_class_decomposition_matches_doc_level_truth(spark, tmp_path):
     assert row["n_tp"] == len(pred & truth)
 
 
-def test_a191_driver_path_matches_distributed_fallback(spark, tmp_path):
-    """a191's driver-exact numpy path must reproduce the distributed
-    pipeline bit-for-bit. Synthetic 12-day panel engineered to hit the
-    estimator's branches: duplicate v values (den = 0 pairs dropped),
-    a slope exactly -1 (excluded), slopes < -1 (k_neg > 0), slope
-    ties, and an even residual count (mean-of-two intercept)."""
-    import datetime
-
-    from grouper_spark.queries.inference4 import (
-        _a191_distributed,
-        _dailyv,
-    )
-    from grouper_spark.queries import load_all
-
-    base = datetime.date(2024, 1, 1)
-    # (v, y-kilodollars): v repeats (5 twice), one pair with slope -1
-    # ((v,yk) (1,10) vs (2,9)), steep negative slopes via (3,40)->(4,2)
-    panel = [
-        (1, 10),
-        (2, 9),
-        (3, 40),
-        (4, 2),
-        (5, 12),
-        (5, 30),
-        (6, 18),
-        (7, 18),
-        (8, 25),
-        (9, 60),
-        (10, 33),
-        (12, 41),
-    ]
-    rows = []
-    oid = 0
-    for day, (v, yk) in enumerate(panel):
-        d = base + datetime.timedelta(days=day)
-        # v orders summing to ~yk*1000 dollars: v-1 orders of 1000.00
-        # plus one order carrying the remainder
-        for k in range(v):
-            price = 1000.0 if k < v - 1 else float(yk * 1000 - (v - 1) * 1000)
-            rows.append((oid, d, price))
-            oid += 1
-    spark.createDataFrame(
-        rows, "o_orderkey bigint, o_orderdate date, o_totalprice double"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{tmp_path}/orders.parquet"
-    )
-    sf_dir = str(tmp_path)
-    got = load_all()["a191_passing_bablok"].fn(spark, sf_dir).collect()
-    want = _a191_distributed(spark, _dailyv(spark, sf_dir)).collect()
-    assert len(got) == len(want) == 1
-    assert got[0].asDict() == want[0].asDict()
-
-
 def test_a361_intersection_triangles_match_bruteforce(spark, tmp_path):
     """a361's per-edge adjacency-intersection triangle counts must
     reproduce a brute-force triple enumeration. Synthetic baskets
@@ -360,43 +307,6 @@ def test_a361_intersection_triangles_match_bruteforce(spark, tmp_path):
         .collect()
     }
     assert got == want
-
-
-def test_a208_driver_path_matches_distributed_fallback(spark, tmp_path):
-    """a208's driver-exact numpy path must reproduce the distributed
-    pipeline bit-for-bit. Two synthetic panels: even n with repeated v
-    values (slope ties across pairs, mean-of-two medians at every
-    level) and odd n (middle-element picks)."""
-    import datetime
-
-    from grouper_spark.queries import load_all
-    from grouper_spark.queries.inference4 import _dailyv
-    from grouper_spark.queries.inference5 import _a208_distributed
-
-    base = datetime.date(2024, 3, 1)
-    for panel in (
-        [3, 7, 7, 2, 9, 9, 4, 11, 3, 8, 10, 5],  # n=12, ties
-        [5, 1, 6, 6, 2, 8, 4, 9, 7, 3, 12],      # n=11
-    ):
-        rows = []
-        oid = 0
-        for day, v in enumerate(panel):
-            d = base + datetime.timedelta(days=day)
-            for _ in range(v):
-                rows.append((oid, d, 100.0))
-                oid += 1
-        spark.createDataFrame(
-            rows, "o_orderkey bigint, o_orderdate date, o_totalprice double"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{tmp_path}/orders.parquet"
-        )
-        sf_dir = str(tmp_path)
-        got = load_all()["a208_siegel_repeated_medians"].fn(
-            spark, sf_dir
-        ).collect()
-        want = _a208_distributed(spark, _dailyv(spark, sf_dir)).collect()
-        assert len(got) == len(want) == 1
-        assert got[0].asDict() == want[0].asDict()
 
 
 def test_literal_frame_matches_tuple_path(spark):
