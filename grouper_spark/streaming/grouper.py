@@ -7,18 +7,20 @@ at core.clj:99-155, batch apply at core.clj:68-83), re-expressed for a
 Spark world. Preserved invariants (SURVEY.md §2.B):
 
 1.  FIFO within batch (bounded FIFO queue, drained in order).
-2.  Positional result identity (i-th result ↔ i-th submitted item).
+2.  Positional result identity (i-th result ↔ i-th submitted item's
+    handle).
 3.  Scalar broadcast: non-sequence proc result delivered to every item.
 4.  Pad & truncate: short results padded with None, long truncated.
-5.  Callback invoked before the future resolves. A callback that
+5.  Callback invoked before the handle resolves. A callback that
     *raises* falls into the batch failure path (reference body-fn's
     outer catch, core.clj:68-83): errbacks fire for every request in
-    the batch and every not-yet-delivered future receives the
-    exception as its value (already-delivered futures keep their
+    the batch and every not-yet-delivered handle receives the
+    exception as its value (already-delivered handles keep their
     results, mirroring Clojure ``deliver``'s no-op on re-delivery).
 6.  Batch-granular failure: one bad item fails its whole batch; the
-    exception is delivered *as the result value* to every item (deref
-    returns it, does not raise) and to every errback. No retry.
+    exception is delivered *as the result value* to every item's
+    handle (``result()`` returns it, does not raise) and to every
+    errback. No retry.
     (Deviation, documented: a *raising errback* is swallowed rather
     than aborting delivery to the remaining requests — the reference
     would leave their promises undelivered forever.)
@@ -29,7 +31,9 @@ Spark world. Preserved invariants (SURVEY.md §2.B):
     or ``shutdown()`` — and is then delivered (core.clj:124-135).
 8.  Producer backpressure: submit blocks while the queue is full.
 9.  Closed-state rejection: submit after close raises
-    RuntimeError("Grouper is closed").
+    RuntimeError("Grouper is closed"). The closed check and the enqueue
+    are one step under the queue's mutex, so an item is either accepted
+    before shutdown (and drained by it) or rejected, never stranded.
 10. Drain-on-shutdown: close() flushes everything already queued.
 11. No pool → batches process on the single dispatcher thread; pool=N →
     at most N batches in the pool; when all N workers are busy the
@@ -55,21 +59,75 @@ from __future__ import annotations
 
 import queue as _queue
 import threading
-from concurrent.futures import Future, ThreadPoolExecutor
-from dataclasses import dataclass, field
+from concurrent.futures import ThreadPoolExecutor
+from threading import Event
 from typing import Any, Callable
 
 __all__ = ["Grouper", "Request", "start", "submit", "shutdown"]
 
 
-@dataclass
 class Request:
-    """One submitted item (reference: deftype Request, core.clj:13-17)."""
+    """One submitted item and the one-shot handle ``submit`` returns for
+    its result (reference: deftype Request plus its promise,
+    core.clj:13-17).
 
-    obj: Any
-    future: Future = field(default_factory=Future)
-    callback: Callable[[Any], Any] | None = None
-    errback: Callable[[BaseException], Any] | None = None
+    ``result(timeout=None)`` blocks until the item is delivered and
+    returns its value; a batch failure is returned as the exception
+    object, never raised. When the timeout runs out it raises
+    ``TimeoutError``. ``done()`` tells whether the item was delivered.
+    Delivery is first-wins: a second one is a no-op.
+
+    It is deliberately not a ``concurrent.futures.Future``: a Future
+    allocates a condition, a lock, a waiter list and two dicts per item,
+    which cost about half the CPU of a callback-only burst (benchmark
+    workload ``grouper_inproc``). Here the only per-item allocation is
+    this object. A waiter ``Event`` is made only when a caller blocks in
+    ``result()`` before delivery, under the lock its Grouper shares
+    across all of its handles.
+    """
+
+    __slots__ = ("obj", "callback", "errback", "_lock", "_value", "_done", "_waiter")
+
+    def __init__(
+        self,
+        obj: Any,
+        callback: Callable[[Any], Any] | None,
+        errback: Callable[[BaseException], Any] | None,
+        lock: threading.Lock,
+    ) -> None:
+        self.obj = obj
+        self.callback = callback
+        self.errback = errback
+        self._lock = lock
+        self._value: Any = None
+        self._done = False
+        self._waiter: Event | None = None
+
+    def done(self) -> bool:
+        return self._done
+
+    def result(self, timeout: float | None = None) -> Any:
+        if not self._done:
+            with self._lock:
+                if not self._done and self._waiter is None:
+                    self._waiter = Event()
+                waiter = self._waiter
+            if waiter is not None and not waiter.wait(timeout):
+                raise TimeoutError("grouper item not delivered in time")
+        return self._value
+
+    def _deliver(self, value: Any) -> None:
+        # First-wins. Each item is delivered only by the thread running
+        # its batch, so only readers race with this; the lock orders the
+        # flag against a reader creating its waiter.
+        with self._lock:
+            if self._done:
+                return
+            self._value = value
+            self._done = True
+            waiter = self._waiter
+        if waiter is not None:
+            waiter.set()
 
 
 class _BoundedFifo:
@@ -93,17 +151,29 @@ class _BoundedFifo:
         self._dq: Any = deque()
         self._mutex = threading.Lock()
         self._not_full = threading.Condition(self._mutex)
+        self._closed = False
+
+    def close(self) -> None:
+        """Reject every later put, and wake producers blocked on
+        capacity so they raise instead of waiting."""
+        with self._not_full:
+            self._closed = True
+            self._not_full.notify_all()
 
     def put_nowait(self, item: Any) -> None:
         with self._mutex:
+            if self._closed:
+                raise RuntimeError("Grouper is closed")
             if len(self._dq) >= self._maxsize:
                 raise _queue.Full
             self._dq.append(item)
 
     def put(self, item: Any) -> None:
         with self._not_full:
-            while len(self._dq) >= self._maxsize:
+            while not self._closed and len(self._dq) >= self._maxsize:
                 self._not_full.wait()
+            if self._closed:
+                raise RuntimeError("Grouper is closed")
             self._dq.append(item)
 
     def drain(self) -> list:
@@ -118,6 +188,9 @@ class _BoundedFifo:
 
     def empty(self) -> bool:
         return not self._dq
+
+    def __len__(self) -> int:
+        return len(self._dq)
 
 
 class Grouper:
@@ -180,6 +253,15 @@ class Grouper:
             self._slots = None
         self._spark = spark
         self._dataframe_fn = dataframe_fn
+        # Shared by every handle of this Grouper (waiter creation and
+        # delivery) and by the error counter; never one lock per item.
+        self._lock = threading.Lock()
+        # Counters for stats(), each bumped once per batch. The first
+        # three are written only by the dispatcher thread.
+        self._batches = 0
+        self._items = 0
+        self._inline_batches = 0
+        self._error_batches = 0
         self._running = True
         self._wake = threading.Condition()
         self._notified = False
@@ -196,32 +278,47 @@ class Grouper:
         *,
         callback: Callable[[Any], Any] | None = None,
         errback: Callable[[BaseException], Any] | None = None,
-    ) -> Future:
-        """Enqueue one item; returns a Future for its result.
+    ) -> Request:
+        """Enqueue one item; returns its handle (see ``Request``):
+        ``result(timeout=None)`` and ``done()``.
 
         Blocks when the queue is full (producer backpressure) after
         waking the dispatcher for an early size-triggered flush
-        (reference: core.clj:39-45).
+        (reference: core.clj:39-45). Raises
+        ``RuntimeError("Grouper is closed")`` once shutdown has begun.
         """
-        if not self._running:
-            raise RuntimeError("Grouper is closed")
-        req = Request(obj, Future(), callback, errback)
+        req = Request(obj, callback, errback, self._lock)
         try:
             self._queue.put_nowait(req)
         except _queue.Full:
             self._wake_up()
             self._queue.put(req)  # blocking put: backpressure
-        return req.future
+        return req
 
     def flush(self) -> None:
         """Wake the dispatcher for an immediate drain (test/ops helper)."""
         self._wake_up()
+
+    def stats(self) -> dict:
+        """Counters since start, as a plain dict: ``batches`` and
+        ``items`` drained from the queue, ``inline_batches`` run by the
+        dispatcher itself because every pool worker was busy
+        (CallerRuns; 0 without a pool), ``error_batches`` delivered as
+        an exception, and ``queued``, the items waiting now."""
+        return {
+            "batches": self._batches,
+            "items": self._items,
+            "inline_batches": self._inline_batches,
+            "error_batches": self._error_batches,
+            "queued": len(self._queue),
+        }
 
     def shutdown(self) -> None:
         """Graceful drain-then-stop (reference: core.clj:58-66,152-155):
         already-queued items are processed before termination."""
         if not self._running:
             return
+        self._queue.close()
         self._running = False
         while self._dispatcher.is_alive():
             self._wake_up()
@@ -283,6 +380,8 @@ class Grouper:
             batch = self._queue.drain()
             if not batch:
                 continue
+            self._batches += 1
+            self._items += len(batch)
             if self._executor is None:
                 self._process(batch)
             elif self._slots is None:
@@ -290,7 +389,7 @@ class Grouper:
                 # It may also reject (e.g. its owner already shut it
                 # down) — deliver the rejection as a value instead of
                 # letting it kill the dispatcher thread (which would
-                # strand every in-flight future and block producers).
+                # strand every in-flight handle and block producers).
                 try:
                     self._executor.submit(self._process, batch)
                 except Exception as exc:
@@ -305,6 +404,7 @@ class Grouper:
                 # CallerRunsPolicy: all workers busy → the dispatcher runs
                 # the batch itself, stalling the drain loop (bounded
                 # in-flight; overload backpressure reaches submit()).
+                self._inline_batches += 1
                 self._process(batch)
 
     # -- batch apply (body-fn, core.clj:68-83) ------------------------------
@@ -346,24 +446,26 @@ class Grouper:
                 # (core.clj:77-83) where the callback runs inside the try.
                 if req.callback is not None:
                     req.callback(res)
-                req.future.set_result(res)
+                req._deliver(res)
         except Exception as exc:
             self._deliver_error(batch, exc)
 
     def _deliver_error(self, batch: list[Request], exc: Exception) -> None:
         # Batch-granular failure: exception delivered AS A VALUE to
-        # every item (deref returns it), plus errbacks (core.clj:80-83).
-        # Already-delivered futures keep their results (Clojure
-        # `deliver` is a no-op on a realized promise); errback errors
-        # are swallowed so one bad errback can't strand the rest.
+        # every item (result() returns it), plus errbacks
+        # (core.clj:80-83). Already-delivered handles keep their results
+        # (first-wins, like Clojure `deliver` on a realized promise);
+        # errback errors are swallowed so one bad errback can't strand
+        # the rest.
+        with self._lock:
+            self._error_batches += 1
         for req in batch:
             if req.errback is not None:
                 try:
                     req.errback(exc)
                 except Exception:
                     pass
-            if not req.future.done():
-                req.future.set_result(exc)
+            req._deliver(exc)
 
 
 # -- functional API mirroring the reference (start!/submit!/shutdown!,
@@ -379,8 +481,9 @@ def start(proc_fn: Callable, **options) -> Grouper:
     return Grouper(proc_fn, **options)
 
 
-def submit(grouper: Grouper, obj: Any, *, callback=None, errback=None) -> Future:
-    """``submit!`` parity: enqueue one item, get a deref-able handle."""
+def submit(grouper: Grouper, obj: Any, *, callback=None, errback=None) -> Request:
+    """``submit!`` parity: enqueue one item, get its handle
+    (``result(timeout=None)``, ``done()``)."""
     return grouper.submit(obj, callback=callback, errback=errback)
 
 

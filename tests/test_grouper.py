@@ -450,3 +450,208 @@ def test_rejected_user_executor_delivers_error_not_hang():
         assert isinstance(fut2.result(5), RuntimeError)
     finally:
         g.shutdown()
+
+
+# -- invariants 9/10: submit racing shutdown -------------------------------
+
+
+def test_submit_racing_shutdown_is_rejected_not_stranded():
+    """shutdown() lands between submit's closed check and its enqueue:
+    the item must be rejected, not queued behind a dispatcher that has
+    already drained and exited."""
+    g = make(lambda xs: xs)
+    put_nowait = g._queue.put_nowait
+
+    def shutdown_then_put(item):
+        g.shutdown()
+        put_nowait(item)
+
+    g._queue.put_nowait = shutdown_then_put
+    with pytest.raises(RuntimeError, match="is closed"):
+        g.submit(1)
+    assert not g._dispatcher.is_alive()
+    assert g._queue.empty()
+
+
+def test_producer_blocked_on_full_queue_is_rejected_by_shutdown():
+    """A producer waiting for capacity when shutdown begins raises; the
+    items accepted before it are still drained."""
+    release = threading.Event()
+    g = Grouper(lambda xs: release.wait(5) and xs, capacity=1, interval=None)
+    h1 = g.submit(1)
+    g.flush()
+    deadline = time.time() + 5
+    while not g._queue.empty() and time.time() < deadline:
+        time.sleep(0.01)  # dispatcher took item 1 and is stuck in proc
+    h2 = g.submit(2)  # fills the queue
+    raised = []
+
+    def producer():
+        try:
+            g.submit(3)
+        except RuntimeError as exc:
+            raised.append(exc)
+
+    t = threading.Thread(target=producer, daemon=True)
+    t.start()
+    time.sleep(0.05)  # producer now waits for capacity
+    stopper = threading.Thread(target=g.shutdown, daemon=True)
+    stopper.start()
+    t.join(5)
+    assert not t.is_alive()
+    assert [str(e) for e in raised] == ["Grouper is closed"]
+    release.set()
+    stopper.join(5)
+    assert not stopper.is_alive()
+    assert (h1.result(5), h2.result(5)) == (1, 2)
+
+
+# -- the handle submit returns ---------------------------------------------
+
+
+def _wait_for(cond, timeout=5.0):
+    deadline = time.time() + timeout
+    while not cond() and time.time() < deadline:
+        time.sleep(0.005)
+    assert cond()
+
+
+def test_blocked_result_callers_all_wake_with_their_own_value():
+    with make(lambda xs: [x * 10 for x in xs]) as g:
+        handles = [g.submit(i) for i in range(3)]
+        got = [None] * 3
+
+        def wait(i):
+            got[i] = handles[i].result(5)
+
+        threads = [threading.Thread(target=wait, args=(i,)) for i in range(3)]
+        for t in threads:
+            t.start()
+        _wait_for(lambda: all(h._waiter is not None for h in handles))
+        assert not any(h.done() for h in handles)
+        g.flush()
+        for t in threads:
+            t.join(5)
+        assert not any(t.is_alive() for t in threads)
+    assert got == [0, 10, 20]
+    assert all(h.done() for h in handles)
+
+
+def test_result_timeout_then_later_flush_delivers():
+    with make(lambda xs: [x + 1 for x in xs]) as g:
+        h = g.submit(1)
+        assert not h.done()
+        with pytest.raises(TimeoutError):
+            h.result(0.05)
+        assert not h.done()
+        g.flush()
+        assert h.result(5) == 2
+        assert h.done()
+
+
+def test_raising_callback_mid_batch_keeps_earlier_results():
+    """Items delivered before the callback raised keep their results
+    (first delivery wins); the rest get the exception as their value."""
+    boom = ValueError("callback exploded")
+
+    def callback(res):
+        if res == 4:
+            raise boom
+
+    with make(lambda xs: xs) as g:
+        handles = [g.submit(i, callback=callback) for i in range(8)]
+        g.flush()
+        got = [h.result(5) for h in handles]
+    assert got == [0, 1, 2, 3, boom, boom, boom, boom]
+
+
+def test_waiter_allocated_only_for_a_blocked_result(monkeypatch):
+    """The handle makes no synchronisation object per item: a callback-
+    only burst creates no waiter, and one caller blocked in result()
+    before delivery creates exactly one."""
+    from grouper_spark.streaming import grouper as grouper_mod
+
+    made = []
+
+    class CountingEvent(threading.Event):
+        def __init__(self):
+            super().__init__()
+            made.append(self)
+
+    monkeypatch.setattr(grouper_mod, "Event", CountingEvent)
+
+    delivered = []
+    with make(lambda xs: [x + 1 for x in xs], pool=2) as g:
+        handles = [g.submit(i, callback=delivered.append) for i in range(1000)]
+        g.flush()
+    assert all(h.done() for h in handles)
+    assert sorted(delivered) == list(range(1, 1001))
+    assert len(made) == 0
+
+    got = []
+    with make(lambda xs: [x + 1 for x in xs]) as g:
+        h = g.submit(1)
+        t = threading.Thread(target=lambda: got.append(h.result(5)))
+        t.start()
+        _wait_for(lambda: len(made) == 1)
+        g.flush()
+        t.join(5)
+        assert not t.is_alive()
+    assert got == [2]
+    assert len(made) == 1
+
+
+# -- stats() -----------------------------------------------------------------
+
+
+def test_stats_counts_batches_items_and_errors():
+    def proc(xs):
+        if "bad" in xs:
+            raise ValueError("bad item")
+        return xs
+
+    g = make(proc)
+    assert g.stats() == {
+        "batches": 0, "items": 0, "inline_batches": 0, "error_batches": 0, "queued": 0,
+    }
+    for size, bad in ((3, False), (5, True), (2, False)):
+        handles = [g.submit("bad" if bad and i == 2 else i) for i in range(size)]
+        assert g.stats()["queued"] == size
+        g.flush()
+        [h.result(5) for h in handles]
+    assert g.stats() == {
+        "batches": 3, "items": 10, "inline_batches": 0, "error_batches": 1, "queued": 0,
+    }
+    g.shutdown()
+
+
+def test_result_racing_delivery_stress():
+    """Eight producers, more than the cores, each block in result() on
+    their own items while pool workers deliver them, with a very short
+    thread switch interval so the waiter creation and the delivery
+    interleave often. A lost wake-up shows as a timeout."""
+    import sys
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        bad = []
+        with Grouper(lambda xs: [x * 3 for x in xs], capacity=16, interval=1, pool=3) as g:
+
+            def producer(base):
+                for i in range(base, base + 300):
+                    try:
+                        if g.submit(i).result(10) != i * 3:
+                            bad.append(i)
+                    except TimeoutError:
+                        bad.append(i)
+
+            threads = [threading.Thread(target=producer, args=(k * 1000,)) for k in range(8)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(60)
+            assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert bad == []
